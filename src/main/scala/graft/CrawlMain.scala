@@ -10,7 +10,16 @@ import org.apache.spark.sql.SparkSession
  *   spark-submit --class graft.CrawlMain <jar> \
  *     --pages <parquet dir> --seeds <url,url,...> --checkpoint <dir> \
  *     [--resume] [--budget N] [--round-seconds S] [--max-rounds N] \
- *     [--bloom-expected N] [--bloom-distributed-min N] [--seen-buckets N]
+ *     [--bloom-expected N] [--cpus N]
+ *
+ *  - `--budget`: per-host fetches per round (default: unlimited);
+ *  - `--round-seconds`: wall seconds a round stands for when robots
+ *    Crawl-delay shrinks the budget (default 30);
+ *  - `--bloom-expected`: sizing of the seen-set Bloom pre-filter (default
+ *    4M urls). Dedup stays exact whatever the size: the filter only routes
+ *    definitely-new urls around the anti-join against the seen set;
+ *  - `--cpus`: local cores when no master is given (default: all).
+ * Any other flag is rejected.
  *
  * On a cluster nothing changes but the master/executor configs: the engine
  * is partition-parallel throughout (fetch join, tokenization, dedup
@@ -19,13 +28,16 @@ import org.apache.spark.sql.SparkSession
  */
 object CrawlMain {
 
+  private val Flags = Set("pages", "seeds", "checkpoint", "budget", "round-seconds",
+    "max-rounds", "bloom-expected", "cpus")
+
   private def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map.empty[String, String]
     var i = 0
     while (i < args.length) {
       args(i) match {
         case "--resume" => m += "resume" -> "true"; i += 1
-        case flag if flag.startsWith("--") && i + 1 < args.length =>
+        case flag if Flags(flag.drop(2)) && i + 1 < args.length =>
           m += flag.drop(2) -> args(i + 1); i += 2
         case other => sys.error(s"unexpected argument: $other")
       }
@@ -56,9 +68,7 @@ object CrawlMain {
       perHostBudgetPerRound = a.get("budget").map(_.toInt).getOrElse(Int.MaxValue),
       roundSeconds = a.get("round-seconds").map(_.toDouble).getOrElse(30.0),
       maxRounds = a.get("max-rounds").map(_.toInt).getOrElse(10000),
-      bloomExpectedInsertions = a.get("bloom-expected").map(_.toLong).getOrElse(4L * 1000 * 1000),
-      bloomDistributedMinRows = a.get("bloom-distributed-min").map(_.toLong).getOrElse(4L * 1000 * 1000),
-      seenBuckets = a.get("seen-buckets").map(_.toInt).getOrElse(0))
+      bloomExpectedInsertions = a.get("bloom-expected").map(_.toLong).getOrElse(4L * 1000 * 1000))
 
     val pages = spark.read.parquet(pagesDir)
     val engine = new CrawlEngine(spark, pages, cfg, ckpt)

@@ -56,41 +56,20 @@ final case class CrawlConfig(
     bloomFpp: Double = 0.01,
     /** below this many seen urls the Bloom pre-filter isn't worth building */
     bloomMinSeen: Long = 10000L,
-    /** increment row count at which Bloom maintenance switches from a
-      * driver-side collect of key hashes to a per-partition BloomFilter
-      * build merged via treeAggregate (the 10^10-frontier scale path: the
-      * fixed per-task filter cost amortizes over millions of rows per task,
-      * and the driver never materializes the hash column) */
-    bloomDistributedMinRows: Long = 4L * 1000 * 1000,
-    /** which approximate seen pre-filter to maintain: "bloom" (insert-only,
-      * space-optimal at the configured fpp) or "cuckoo" (deletable, 16-bit
-      * fingerprints → ~1.2e-4 FPR, ~3.5× the bits; north rule names both).
-      * The bloom* sizing fields apply to either; cuckoo ignores bloomFpp. */
-    seenFilterKind: String = "bloom",
-    /** >0: maintain `seen` as a (seed, url)-bucketed managed table so the
-      * per-round anti-join never re-shuffles the cumulative seen side —
-      * the shuffle that dominates once seen ≫ round size (the 10^10-URL
-      * scale path; with real Iceberg this is the table's bucket spec).
-      * 0 = read seen straight from the committed parquet increments and
-      * let the join shuffle it (fine while seen is round-sized). */
-    seenBuckets: Int = 0,
     /** Frontier row-count under which the fetch join broadcasts the
       * frontier. Scale-dependent (guide §3.1): broadcasting saves any
       * shuffle of the pages side — decisive on a cluster where the pages
       * table is the 100 TB side — but the broadcast relation itself costs
       * rows×~120 B built serially on the driver and resident on every
-      * executor. Measured on this single-box bench: a 1.4M-row frontier
-      * broadcast (~170 MB relation) made the big crawl rounds 30-40%
-      * slower than the shuffle join (round 6: 8.0-10.4 s → 5.8-6.5 s;
-      * whole crawl 26-35 s → 22-31 s), so the local default caps the
-      * broadcast near the conventional tens-of-MB relation size.
-      * Production clusters should raise it (env override
-      * SPARK_GRAFT_FRONTIER_BCAST_MAX) to whatever relation size their
-      * executors comfortably hold, because the alternative there is
-      * re-shuffling a table orders of magnitude larger than any frontier. */
-    broadcastFrontierMaxRows: Long =
-      sys.env.get("SPARK_GRAFT_FRONTIER_BCAST_MAX").map(_.toLong)
-        .getOrElse(200L * 1000),
+      * executor. Measured on a single box: a 1.4M-row frontier broadcast
+      * (~170 MB relation) made the big crawl rounds 30-40% slower than the
+      * shuffle join (8.0-10.4 s → 5.8-6.5 s per round), so the default
+      * caps the broadcast near the conventional tens-of-MB relation size.
+      * Callers set this field: a cluster should raise it to whatever
+      * relation size its executors comfortably hold, because the
+      * alternative there is re-shuffling a table orders of magnitude larger
+      * than any frontier. */
+    broadcastFrontierMaxRows: Long = 200L * 1000,
     /** host-hash shards for frontier partition lineage (north rule) */
     numShards: Int = 32,
     /** salt buckets splitting a skewed host inside the politeness window */
@@ -419,101 +398,25 @@ final class CrawlEngine(
     var done = prevCounters.done
     var roundsLog = Vector.empty[RoundCounters]
 
-    // Bucketed-seen mode (cfg.seenBuckets > 0): `seen` lives in a managed
-    // table bucketed by the anti-join keys, so the cumulative side arrives
-    // at every round's anti-join already hash-clustered -- the plan shows
-    // ONE Exchange (the round's candidates), never a reshuffle of the
-    // 10^10-row seen set. Rebuilt here from the committed increments (which
-    // also covers resume), appended after each commit. The parquet
-    // increments stay the durable source of truth; the table is a join
-    // accelerator, exactly what an Iceberg bucket spec gives for free.
-    var seenTable: Option[String] = None
-    def seenForJoin: DataFrame = seenTable.map(spark.table).getOrElse(seen)
-    try {
-    seenTable =
-      if (cfg.seenBuckets <= 0) None
-      else {
-        // name from a SHA-1 of the checkpoint dir: engines on distinct
-        // checkpoints can never collide (a 31-bit hashCode could). A
-        // checkpoint dir has exactly ONE writer at a time (same contract as
-        // the round manifests themselves); concurrent engines on one
-        // checkpoint are unsupported and would race on this DROP/rebuild.
-        val sha = java.security.MessageDigest.getInstance("SHA-1")
-          .digest(ckptDir.getBytes("UTF-8")).take(10).map("%02x".format(_)).mkString
-        val name = s"graft_seen_$sha"
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        // clean stale files from a previous process (warehouse dir may be a
-        // plain path or a URI — don't feed raw paths to the URI parser)
-        val whConf = spark.conf.get("spark.sql.warehouse.dir")
-        val wh =
-          try {
-            val u = new java.net.URI(whConf)
-            if (u.getScheme != null) java.nio.file.Paths.get(u) else java.nio.file.Paths.get(whConf)
-          } catch { case _: Exception => java.nio.file.Paths.get(whConf) }
-        val loc = wh.resolve(name)
-        if (java.nio.file.Files.exists(loc)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(loc).iterator().asScala.toList.reverse
-            .foreach(java.nio.file.Files.delete)
-        }
-        seen.select("seed", "url").write.format("parquet")
-          .bucketBy(cfg.seenBuckets, "seed", "url").saveAsTable(name)
-        Some(name)
-      }
-
-    // Cumulative seen filter (Bloom or cuckoo per cfg.seenFilterKind) over
-    // (seed, url) keys, rebuilt from seen on entry. Two maintenance paths,
-    // gated by cfg.bloomDistributedMinRows:
-    //  - small increments: COMPACT 64-bit hashes (xxhash64, computed in the
-    //    plan, codegen'd) collected and inserted driver-side -- below the
-    //    threshold the fixed per-task cost of shipping filter partials
-    //    dominates (measured to anti-scale with core count at sandbox sizes);
-    //  - large increments (the 10^10-frontier scale path): per-partition
-    //    filter build merged via treeAggregate over the same hash column.
-    //    The zero value is null (not an empty multi-MB filter), so nothing
-    //    heavy rides the task binaries; partials are created lazily on the
-    //    first row of each partition and merged in a 2-level tree, so the
-    //    driver receives O(sqrt(P)) partials, not P.
-    // Exactness never depends on this: the anti-join against `seen` stays
-    // (which is also what makes a full cuckoo filter's degrade-to-maybe
-    // overflow contract safe).
-    var seenFilter: SeenFilter = null
-    val mkFilter = SeenFilter.factory(
-      cfg.seenFilterKind, cfg.bloomExpectedInsertions, cfg.bloomFpp)
+    // Cumulative Bloom filter over (seed, url) keys, built once seen
+    // reaches cfg.bloomMinSeen (rebuilt from seen on resume). Maintained by
+    // collecting COMPACT 64-bit key hashes (xxhash64, computed in the plan,
+    // codegen'd) and inserting them driver-side: 8 B per new url, while a
+    // per-partition filter build would ship a full-size partial per task.
+    // Exactness never depends on the filter: the anti-join against `seen`
+    // stays; the filter only routes definitely-new urls around it.
+    var seenFilter: BloomFilter = null
     def keyHashCol = xxhash64(concat_ws("\u0001", col("seed"), col("url")))
-    def filterInsert(df: DataFrame, rowsHint: Long): Unit = {
-      if (seenFilter == null) seenFilter = mkFilter()
-      val hashes = df.select(keyHashCol.as("h")).as[Long]
-      if (rowsHint >= cfg.bloomDistributedMinRows) {
-        val mk = mkFilter
-        val merged = hashes.rdd.treeAggregate(null: SeenFilter)(
-          seqOp = (sf, h) => {
-            val b = if (sf == null) mk() else sf
-            b.putLong(h)
-            b
-          },
-          combOp = (a, b) =>
-            if (a == null) b
-            else if (b == null) a
-            else { a.mergeInPlace(b); a },
-          depth = 2)
-        if (merged != null) seenFilter.mergeInPlace(merged)
-      } else {
-        hashes.collect().foreach(seenFilter.putLong)
-      }
+    def filterInsert(df: DataFrame): Unit = {
+      if (seenFilter == null)
+        seenFilter = BloomFilter.create(cfg.bloomExpectedInsertions, cfg.bloomFpp)
+      df.select(keyHashCol.as("h")).as[Long].collect().foreach(seenFilter.putLong)
     }
 
     var round = startRound
     var emptyFrontier = frontierCount == 0
 
-    // Optional per-round phase telemetry (SPARK_GRAFT_ROUND_LOG=1): wall
-    // seconds spent in each driver-visible phase, to stderr. Used to locate
-    // the serial (non-scaling) fraction of a crawl round.
-    val roundLog = sys.env.contains("SPARK_GRAFT_ROUND_LOG")
-    def tickSec(t0: Long): Double = (System.nanoTime() - t0) / 1e9
-
     while (!emptyFrontier && round < startRound + cfg.maxRounds) {
-      val tRound = System.nanoTime()
       sc.setJobDescription(
         s"crawl round=$round seeds=${seeds.size} frontier=$frontierCount seen=$seenCount")
       // ---- politeness: per-host rank within each crawl ----
@@ -619,7 +522,7 @@ final class CrawlEngine(
         .persist(StorageLevel.MEMORY_AND_DISK)
       val cand = candCached.observe(obsCand, count(lit(1)).as("n"))
 
-      if (seenFilter == null && seenCount >= cfg.bloomMinSeen) filterInsert(seen, seenCount)
+      if (seenFilter == null && seenCount >= cfg.bloomMinSeen) filterInsert(seen)
       val newUrlsCached = {
         if (seenFilter != null) {
           val filterBc = sc.broadcast(seenFilter)
@@ -627,9 +530,9 @@ final class CrawlEngine(
           val keyed = cand.withColumn("_h", keyHashCol)
           val maybeSeen = keyed.filter(mightContain(col("_h"))).drop("_h")
           val definitelyNew = keyed.filter(!mightContain(col("_h"))).drop("_h")
-          maybeSeen.join(seenForJoin, Seq("seed", "url"), "left_anti").unionByName(definitelyNew)
+          maybeSeen.join(seen, Seq("seed", "url"), "left_anti").unionByName(definitelyNew)
         } else {
-          cand.join(seenForJoin, Seq("seed", "url"), "left_anti")
+          cand.join(seen, Seq("seed", "url"), "left_anti")
         }
       }.persist(StorageLevel.MEMORY_AND_DISK)
       val newUrls = newUrlsCached.observe(obsNew, count(lit(1)).as("n"))
@@ -678,10 +581,8 @@ final class CrawlEngine(
       val seenInc = newUrls.select("seed", "url")
 
       // ---- commit (counters evaluated after the data writes land) ----
-      val tPlan = tickSec(tRound) // plan assembly + politeness count job
       var counters: RoundCounters = null
       val fetched = frontierCount - deferredCount
-      val tCommit0 = System.nanoTime()
       val snap = catalog.commit(spark, ckptDir, round,
         Map("frontier" -> nextFrontier, "seen_inc" -> seenInc, "results_inc" -> resultsRound),
         seeds, counters = {
@@ -698,33 +599,15 @@ final class CrawlEngine(
         }, partitionBy = Map("frontier" -> Seq("host_shard")))
       val newCount = obsNew.get("n").asInstanceOf[Long]
       val newFrontierCount = obsFrontier.get("n").asInstanceOf[Long]
-      val tCommit = tickSec(tCommit0)
 
       // frontier and seen are re-read from the committed parquet: constant-
       // depth, disk-backed lineage regardless of round count (without this
       // the plan tree grows exponentially with rounds)
-      val tRead0 = System.nanoTime()
       val committedFrontier = catalog.readTable(spark, snap, "frontier")
       val newSeen = catalog.readTables(spark, seenIncSnaps(round), "seen_inc")
-      val tRead = tickSec(tRead0)
 
       // ---- seen-filter maintenance ----
-      val tBloom0 = System.nanoTime()
-      if (seenFilter != null && newCount > 0) filterInsert(newUrlsCached.toDF(), newCount)
-      val tBloom = tickSec(tBloom0)
-
-      // ---- bucketed-seen maintenance: append the committed increment ----
-      val tSeen0 = System.nanoTime()
-      if (newCount > 0) seenTable.foreach { name =>
-        catalog.readTable(spark, snap, "seen_inc").select("seed", "url")
-          .write.format("parquet").mode("append")
-          .bucketBy(cfg.seenBuckets, "seed", "url").saveAsTable(name)
-      }
-      val tSeenApp = tickSec(tSeen0)
-      if (roundLog) System.err.println(
-        f"[round] r=$round%2d frontier=$frontierCount%8d plan=$tPlan%6.2fs " +
-          f"commit=$tCommit%6.2fs read=$tRead%5.2fs bloom=$tBloom%5.2fs " +
-          f"seenApp=$tSeenApp%5.2fs total=${tickSec(tRound)}%6.2fs")
+      if (seenFilter != null && newCount > 0) filterInsert(newUrlsCached.toDF())
 
       // ---- rotate state ----
       stepOut.unpersist()
@@ -743,17 +626,6 @@ final class CrawlEngine(
     }
 
     new CrawlRun(spark, ckptDir, seeds, failures, roundsLog, round - 1, catalog)
-    } finally {
-      // the bucketed seen table is a join accelerator, not state: drop it
-      // (even on a mid-crawl failure, including one during its own build)
-      // so crawls never leak warehouse tables — resume rebuilds it from
-      // the committed increments. The drop itself must never mask the
-      // real failure (e.g. the SparkContext died mid-crawl).
-      try seenTable.foreach(name => spark.sql(s"DROP TABLE IF EXISTS $name"))
-      catch { case e: Exception =>
-        System.err.println(s"[crawl] seen-table cleanup failed (ignored): $e")
-      }
-    }
   }
 }
 

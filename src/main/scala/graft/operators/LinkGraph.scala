@@ -190,7 +190,9 @@ object LinkGraph {
         ranks = mat
       } else ranks = next
     }
-    if (iters == 0) { // contract: the returned ranks are materialized
+    // contract: the returned ranks are materialized (a graph with dangling
+    // mass already persisted them before the loop)
+    if (iters == 0 && cached == null) {
       ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
       ranks.count()
     }

@@ -256,32 +256,6 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(run.status.map(_.fetched).sum == 6)
   }
 
-  test("distributed Bloom path (treeAggregate merge) produces identical results") {
-    val h = "http://127.0.0.1:8000"
-    // bloomDistributedMinRows = 0 forces every filter insert through the
-    // per-partition build + treeAggregate merge (the 10^10-frontier path)
-    val cfg = CrawlConfig(bloomMinSeen = 0, bloomExpectedInsertions = 1000,
-      bloomDistributedMinRows = 0)
-    val (run, m) = doCrawl(s"$h/start", cfg)
-    val (_, m2) = doCrawl(s"$h/start")
-    assert(m == m2)
-    assert(run.status.map(_.fetched).sum == 6) // exactly-once preserved
-  }
-
-  test("cuckoo seen filter (driver and treeAggregate paths) produces identical results") {
-    val h = "http://127.0.0.1:8000"
-    val (_, golden) = doCrawl(s"$h/start")
-    val (run, m) = doCrawl(s"$h/start",
-      CrawlConfig(seenFilterKind = "cuckoo", bloomMinSeen = 0, bloomExpectedInsertions = 1000))
-    assert(m == golden)
-    assert(run.status.map(_.fetched).sum == 6)
-    val (run2, m2) = doCrawl(s"$h/start",
-      CrawlConfig(seenFilterKind = "cuckoo", bloomMinSeen = 0, bloomExpectedInsertions = 1000,
-        bloomDistributedMinRows = 0))
-    assert(m2 == golden)
-    assert(run2.status.map(_.fetched).sum == 6) // exactly-once preserved
-  }
-
   test("politeness: per-host budget defers, result unchanged") {
     val h = PagesGen.host("multi-links")
     val cfg = CrawlConfig(perHostBudgetPerRound = 1)
@@ -340,28 +314,32 @@ class CrawlEngineSpec extends AnyFunSuite {
   test("resume from checkpoint reproduces the exact final state (north rule St4)") {
     val h = "http://127.0.0.1:8000"
     val seed = s"$h/start"
-    val dir = java.nio.file.Files.createTempDirectory("graft-resume-").toString
-    val run = new CrawlEngine(spark, pages, CrawlConfig(), dir).crawl(seed)
-    val expected = collectMap(run, seed)
-    val lastRound = run.lastRound
-    assert(lastRound >= 2)
-    // simulate a kill after round 1's commit: delete every later round
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    Files.list(Paths.get(dir)).iterator().asScala.toList.foreach { p =>
-      val name = p.getFileName.toString
-      val round =
-        if (name.startsWith("manifest-r")) Some(name.stripPrefix("manifest-r").stripSuffix(".json").toInt)
-        else if (name.startsWith("r") && name.drop(1).forall(_.isDigit)) Some(name.drop(1).toInt)
-        else None
-      if (round.exists(_ > 1)) {
-        // recursive delete
-        Files.walk(p).iterator().asScala.toList.reverse.foreach(Files.delete)
+    // the second config has the Bloom pre-filter active from round 0, so
+    // resume rebuilds it from the committed seen increments
+    Seq(CrawlConfig(), CrawlConfig(bloomMinSeen = 0, bloomExpectedInsertions = 1000)).foreach { cfg =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-resume-").toString
+      val run = new CrawlEngine(spark, pages, cfg, dir).crawl(seed)
+      val expected = collectMap(run, seed)
+      val lastRound = run.lastRound
+      assert(lastRound >= 2)
+      // simulate a kill after round 1's commit: delete every later round
+      import java.nio.file.{Files, Paths}
+      import scala.jdk.CollectionConverters._
+      Files.list(Paths.get(dir)).iterator().asScala.toList.foreach { p =>
+        val name = p.getFileName.toString
+        val round =
+          if (name.startsWith("manifest-r")) Some(name.stripPrefix("manifest-r").stripSuffix(".json").toInt)
+          else if (name.startsWith("r") && name.drop(1).forall(_.isDigit)) Some(name.drop(1).toInt)
+          else None
+        if (round.exists(_ > 1)) {
+          // recursive delete
+          Files.walk(p).iterator().asScala.toList.reverse.foreach(Files.delete)
+        }
       }
+      val resumed = new CrawlEngine(spark, pages, cfg, dir).resume()
+      assert(resumed.lastRound == lastRound)
+      assert(collectMap(resumed, seed) == expected, s"config $cfg")
     }
-    val resumed = new CrawlEngine(spark, pages, CrawlConfig(), dir).resume()
-    assert(resumed.lastRound == lastRound)
-    assert(collectMap(resumed, seed) == expected)
   }
 
   test("resume after a crash MID-commit: orphan temp manifest and data never count as a commit") {

@@ -54,11 +54,14 @@ class LinkGraphSpec extends AnyFunSuite {
     // node 5 isolated — exercises every term of the recurrence
     val nodes = Seq(1L, 2L, 3L, 4L, 5L)
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (2L, 4L))
-    val got = LinkGraph.pageRank(nodesDf(nodes: _*), edgesDf(edges: _*), iters = 4)
+    def got(iters: Int) = LinkGraph.pageRank(nodesDf(nodes: _*), edgesDf(edges: _*), iters = iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == refPageRank(nodes, edges, 4))
+    // iters = 0: the initial ranks, materialized once despite the dangling mass
+    assert(got(0) == refPageRank(nodes, edges, 0))
+    val ranks = got(4)
+    assert(ranks == refPageRank(nodes, edges, 4))
     // sanity on the shape: the 2-in-edge node outranks the isolated one
-    assert(got(3L) > got(5L))
+    assert(ranks(3L) > ranks(5L))
   }
 
   test("pageRank conserves mass up to documented truncation loss") {
